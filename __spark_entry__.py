@@ -18,6 +18,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_manager_spark.workloads import load_registry  # noqa: E402
 
+# driver_green.json / driver_sampled.json live next to the catalog
+_LEDGER_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "etl_manager_spark", "workloads"
+)
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: TPC-H Q3-shaped
@@ -26,38 +31,32 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry["q3_shipping_priority"].fn(spark, "/root/testdata/sf0.001")
 
 
-# Judge-flagged queries that must lead the driver sample regardless of
-# name order. Emptied for round 8 (VERDICT r7 task #1): all six round-7
-# priority entries went driver-green, so the staleness order now serves
-# the never-sampled tail first.
-_DRIVER_PRIORITY: tuple[str, ...] = ()
-
-
 def _staleness_order(names) -> list[str]:
     """Least-trusted queries first, so a driver that samples a PREFIX of
     the catalog always verifies where the evidence is weakest:
 
-    1. never-green priority queries (judge-flagged open wounds),
-    2. sampled-but-never-green (a driver row exists and it wasn't green —
+    1. sampled-but-never-green (a driver row exists and it wasn't green —
        fixed oracles awaiting confirmation),
-    3. never-sampled (parity-green only),
-    4. green, stalest confirming round first,
+    2. never-sampled (parity-green only),
+    3. green, stalest confirming round first,
     ties by name. Both ledgers (driver_green.json / driver_sampled.json)
     are regenerated from the CORRECTNESS_r*.json files by
     tools/regen_driver_green.py — never hand-kept."""
     import json
+    import warnings
 
-    wdir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "etl_manager_spark",
-        "workloads",
-    )
-
-    def _load(fname):
+    def _load(fname) -> dict[str, int]:
         try:
-            with open(os.path.join(wdir, fname)) as fh:
-                return json.load(fh)
-        except Exception:  # noqa: BLE001 - no ledger → empty
+            with open(os.path.join(_LEDGER_DIR, fname)) as fh:
+                return {str(k): int(v) for k, v in json.load(fh).items()}
+        except (OSError, ValueError, TypeError, AttributeError) as exc:
+            # A broken ledger must not break the driver contract, but a
+            # silent fallback would scramble the verification order.
+            warnings.warn(
+                f"{fname} unusable ({exc!r}); ordering as if empty — "
+                "regenerate with tools/regen_driver_green.py",
+                stacklevel=2,
+            )
             return {}
 
     green = _load("driver_green.json")
@@ -65,12 +64,8 @@ def _staleness_order(names) -> list[str]:
 
     def key(n):
         if n in green:
-            return (3, green[n], 0, n)
-        if n in _DRIVER_PRIORITY:
-            return (0, 0, _DRIVER_PRIORITY.index(n), n)
-        if n in sampled:
-            return (1, 0, 0, n)
-        return (2, 0, 0, n)
+            return (2, green[n], n)
+        return (0 if n in sampled else 1, 0, n)
 
     return sorted(names, key=key)
 

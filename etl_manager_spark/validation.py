@@ -50,7 +50,7 @@ def validate(df: "DataFrame", table: "TableMeta") -> ConstraintReport:
     * ``<col>.pattern`` — values not fully matching the declared regex
     * ``primary_key`` — rows beyond the first per key (duplicate count)
     """
-    aggs = []
+    aggs = [F.count(F.lit(1)).alias("row_count")]
     for col in table.columns:
         name = col["name"]
         if name not in df.columns:
@@ -75,10 +75,10 @@ def validate(df: "DataFrame", table: "TableMeta") -> ConstraintReport:
                 ).alias(f"{name}.pattern")
             )
 
-    report = ConstraintReport(table=table.name, row_count=df.count())
-    if aggs:
-        row = df.agg(*aggs).collect()[0]
-        report.violations.update({k: int(v or 0) for k, v in row.asDict().items()})
+    # violation aliases all carry a ".<check>" suffix: no clash with row_count
+    counts = df.agg(*aggs).collect()[0].asDict()
+    report = ConstraintReport(table=table.name, row_count=counts.pop("row_count"))
+    report.violations.update({k: int(v or 0) for k, v in counts.items()})
 
     if table.primary_key:
         dupes = (

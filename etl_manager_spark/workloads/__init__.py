@@ -54,52 +54,10 @@ def workload(name: str, oracle: Optional[str | Callable[[], str]], category: str
     return deco
 
 
-# The driver-green ledger is GENERATED from the CORRECTNESS_r*.json files
-# by ``tools/regen_driver_green.py`` (never hand-edited): query name →
-# last round whose driver row had hash_match == True. The driver's
-# per-round correctness gate checks a bounded prefix of the registry, so
-# load_registry() orders entries to maximize signal each round:
-# oracle-bearing queries without a green row yet come first, rows-only
-# (no-oracle) entries next, and already-verified queries last —
-# stalest verification first, so fixture/code drift is re-caught soonest.
-def _load_driver_green() -> dict[str, int]:
-    import json
-    import os
-    import warnings
-
-    path = os.path.join(os.path.dirname(__file__), "driver_green.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-        return {str(k): int(v) for k, v in data.items()}
-    except (OSError, ValueError, TypeError, AttributeError) as exc:
-        # A broken ledger must not break the catalog import, but silent
-        # degradation would scramble the driver's verification ordering —
-        # make the fallback loud.
-        warnings.warn(
-            f"driver_green.json unusable ({exc!r}); treating every query "
-            "as never-verified — regenerate with tools/regen_driver_green.py",
-            stacklevel=2,
-        )
-        return {}
-
-
-_DRIVER_GREEN: dict[str, int] = _load_driver_green()
-
-
-def _priority(item: tuple[str, Workload]) -> tuple[int, int]:
-    name, wl = item
-    if wl.oracle_spec is not None and name not in _DRIVER_GREEN:
-        return (0, 0)  # strongest new signal: full oracle check, no green row
-    if wl.oracle_spec is None:
-        return (1, 0)  # rows-only check
-    return (2, _DRIVER_GREEN[name])  # verified: stalest round first
-
-
 def load_registry() -> dict[str, Workload]:
     """Import all workload modules (side-effect: fills REGISTRY) and return
-    the catalog ordered for the driver's bounded correctness prefix (see
-    ``_DRIVER_GREEN``). Sort is stable → insertion order within a tier."""
+    the catalog in import order. Consumers that need an order sort it
+    themselves (by name; ``__spark_entry__`` by verification staleness)."""
     from etl_manager_spark.workloads import (  # noqa: F401
         analytics,
         audit,
@@ -113,4 +71,4 @@ def load_registry() -> dict[str, Workload]:
         tpch_extra,
     )
 
-    return dict(sorted(REGISTRY.items(), key=_priority))
+    return dict(REGISTRY)

@@ -16,6 +16,7 @@ grows.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -27,6 +28,7 @@ from etl_manager_spark.operators.topk import rank_bounded
 from etl_manager_spark.workloads import workload
 from etl_manager_spark.workloads.analytics import _BM25_CTES, _BM25_TERMS
 from etl_manager_spark.workloads.pipeline import _MINHASH_PAIRS_CTES
+from etl_manager_spark.workloads.scratch import fixture_store
 from etl_manager_spark.workloads.tables import load_tables, spread
 
 _TOK = r"LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+'), x -> x <> '')"
@@ -47,33 +49,18 @@ _REL_CTES = f"""rel AS (
 def _bm25_joined(spark, sf_dir):
     """(id, score_q, rel) for every doc matching any query term — the
     shared input of the retrieval-eval family (mirrors _REL_CTES),
-    MATERIALIZED once per fixture to a scratch parquet and read back by
-    all three eval metrics. Same policy as the minhash pair store
-    (pipeline.neardup_pairs_stored): the live score computation is still
+    materialized once per fixture as a ``scratch.fixture_store`` and read
+    back by all three eval metrics. The live score computation is still
     measured by bm25_rank_documents; the eval family — three queries
     over one scored run — reads the stored run, exactly how an
-    evaluation harness consumes a ranker at scale. Store key = fixture
-    mtime + query terms + relevance threshold; superseded stores of the
-    same fixture are swept."""
-    import glob as _glob
+    evaluation harness consumes a ranker at scale."""
     import hashlib
-    import os
-    import shutil
-    import tempfile
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    base = os.path.basename(sf_dir.rstrip("/"))
     params = hashlib.md5(
         f"{'|'.join(_BM25_TERMS)}#{_REL_MIN}#v1".encode()
     ).hexdigest()[:8]
-    tag = f"{base}_{int(os.path.getmtime(src))}_{params}"
-    store = os.path.join(tempfile.gettempdir(), f"bm25_joined_{tag}")
-    for stale in _glob.glob(
-        os.path.join(tempfile.gettempdir(), f"bm25_joined_{base}_*")
-    ):
-        if stale != store:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
+
+    def build(path):
         t = load_tables(spark, sf_dir)
         docs = spread(t["documents"], spark)
         scores = R.bm25_scores(docs, _BM25_TERMS)
@@ -86,7 +73,11 @@ def _bm25_joined(spark, sf_dir):
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("rel"))
         )
-        scores.join(rel, on="id").write.mode("overwrite").parquet(store)
+        scores.join(rel, on="id").write.mode("overwrite").parquet(path)
+
+    store = fixture_store(
+        "bm25_joined", os.path.join(sf_dir, "documents.parquet"), params, build
+    )
     return spark.read.parquet(store)
 
 

@@ -128,6 +128,30 @@ def test_committed_lint_run_was_clean(lint_report):
     assert lint_report["oracle_type_errors"] == {}
 
 
+def test_workload_temp_dirs_go_through_scratch_module():
+    """Every temp-dir artefact of the workload catalog is made by
+    workloads/scratch.py (keyed, atomically committed, sweep-scoped); a
+    hand-rolled tempfile site elsewhere in the catalog is a regression."""
+    import re
+
+    wdir = os.path.join(REPO, "etl_manager_spark", "workloads")
+    pattern = re.compile(r"tempfile\.(gettempdir|mkdtemp)\(")
+    offenders = []
+    for dirpath, _, files in os.walk(wdir):
+        for fname in sorted(files):
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == os.path.join(wdir, "scratch.py"):
+                continue
+            with open(path) as fh:
+                for lineno, line in enumerate(fh, 1):
+                    if pattern.search(line):
+                        offenders.append(f"{os.path.relpath(path, REPO)}:{lineno}")
+    assert not offenders, (
+        "use workloads.scratch.fixture_store / scratch_dir instead of "
+        f"tempfile: {offenders}"
+    )
+
+
 # --------------------------------------------------------------------- #
 # edge-parity ledgers (tools/edge_parity.py) — same discipline as the
 # lint ledgers: entries must name real oracle-bearing catalog queries,

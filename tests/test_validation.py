@@ -46,6 +46,53 @@ def test_validate_clean_data_ok(spark):
     assert report.ok and report.row_count == 2
 
 
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_validate_is_one_aggregation_pass(spark):
+    """The row count rides in the violations aggregate: a table without a
+    primary key costs exactly one aggregation's jobs, where a separate
+    ``df.count()`` scanned the input once more."""
+    from pyspark.sql import functions as F
+
+    t = TableMeta(
+        name="nopk",
+        location="nopk",
+        columns=[
+            {"name": "pid", "type": "int", "nullable": False},
+            {"name": "grade", "type": "int", "enum": [1, 2, 3]},
+            {"name": "code", "type": "character", "pattern": r"[a-z]{3}"},
+        ],
+    )
+    df = spark.createDataFrame(
+        [(1, 1, "abc"), (None, 9, "ABC"), (3, None, None), (4, 2, "xyz")],
+        "pid int, grade int, code string",
+    )
+    n_validate, report = _jobs_in_group(spark, "validate-one-pass", lambda: validate(df, t))
+    assert report.row_count == 4
+    assert report.violations == {"pid.nullable": 1, "grade.enum": 1, "code.pattern": 1}
+
+    n_agg, _ = _jobs_in_group(
+        spark, "validate-agg", lambda: df.agg(F.count(F.lit(1))).collect()
+    )
+    n_count, _ = _jobs_in_group(spark, "validate-count", df.count)
+    assert n_validate == n_agg
+    # the former shape: a df.count() plus the same aggregate
+    assert n_validate <= n_count + n_agg - 1
+
+    # no declared constraint: the report is the row count alone
+    bare = TableMeta(name="bare", location="bare", columns=[{"name": "pid", "type": "int"}])
+    report = validate(df, bare)
+    assert report.ok and report.row_count == 4 and report.violations == {}
+
+
 def test_profile_numeric_columns_one_pass(spark):
     from pyspark.sql import Row
 

@@ -41,7 +41,7 @@ def build_session(cpus: str, app: str, experiment: bool = False):
         .config("spark.ui.enabled", "false")
     )
     # experiment hook: "k=v;k=v" extra confs for conf A/B sweeps — reachable
-    # ONLY when the caller opts in (tools/ab_measure.py / job_profile.py, or
+    # ONLY when the caller opts in (tools/probe.py, or
     # `bench.py --experiment`). A bare `python bench.py` ignores the env var
     # entirely (round-10 verdict #5: environment state must not be able to
     # silently alter a driver bench session).

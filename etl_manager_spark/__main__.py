@@ -40,12 +40,6 @@ def _session(cpus: str = "8"):
     )
 
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
 def cmd_list(args) -> int:
     reg = _registry()
     for name in sorted(reg):
@@ -94,6 +88,8 @@ def cmd_oracle(args) -> int:
 def cmd_verify(args) -> int:
     import duckdb
 
+    from etl_manager_spark.workloads.tables import TABLE_NAMES
+
     reg = _registry()
     w = reg.get(args.query)
     if w is None:
@@ -109,7 +105,7 @@ def cmd_verify(args) -> int:
     spark = _session(args.cpus)
     sdf = w.fn(spark, args.sf_dir).toPandas().sort_index(axis=1)
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{args.sf_dir}/{t}.parquet')"

@@ -851,11 +851,13 @@ def theil_sen_daily_value_trend(spark, sf_dir):
 
     daily = _daily_mean(spark, sf_dir)
     mn = daily.groupBy().agg(F.min("day").alias("d0"))
-    # no checkpoint (round 11): idx is |days| rows derived from the
-    # already-checkpointed daily table by a broadcast join — the two
-    # self-join branches re-derive it from the checkpoint for free
-    # (days-bounded, zero fact scans), and the former eager checkpoint
-    # here was a full barrier wave per invocation
+    # no checkpoint (round 11): idx is |days| rows derived from the daily
+    # aggregate (_daily_mean, itself not checkpointed) by a broadcast
+    # join. The b branch of the self-join is the same plan, so AQE serves
+    # its daily-aggregate shuffle and its d0 broadcast as ReusedExchange
+    # at run time (the initial plan does not show the reuse): b adds no
+    # fact scan. The former eager checkpoint here was a full barrier
+    # wave per invocation
     idx = daily.crossJoin(F.broadcast(mn)).select(
         F.datediff(F.col("day"), F.col("d0")).cast("long").alias("i"),
         "mv_q",

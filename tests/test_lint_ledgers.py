@@ -152,6 +152,28 @@ def test_workload_temp_dirs_go_through_scratch_module():
     )
 
 
+def test_plan_text_comes_from_plans_inspect():
+    """Formatted plan text is read through plans.inspect.explain_formatted
+    only; a private copy of the py4j call elsewhere in the package, the
+    tools or the entry scripts is a regression."""
+    allowed = os.path.join(REPO, "etl_manager_spark", "plans", "inspect.py")
+    paths = [os.path.join(REPO, f) for f in ("bench.py", "__spark_entry__.py")]
+    for top in ("etl_manager_spark", "tools"):
+        for dirpath, _, files in os.walk(os.path.join(REPO, top)):
+            paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    offenders = []
+    for path in sorted(paths):
+        if path == allowed:
+            continue
+        with open(path) as fh:
+            for lineno, line in enumerate(fh, 1):
+                if "PythonSQLUtils.explainString" in line:
+                    offenders.append(f"{os.path.relpath(path, REPO)}:{lineno}")
+    assert not offenders, (
+        f"use etl_manager_spark.plans.explain_formatted instead: {offenders}"
+    )
+
+
 # --------------------------------------------------------------------- #
 # edge-parity ledgers (tools/edge_parity.py) — same discipline as the
 # lint ledgers: entries must name real oracle-bearing catalog queries,
